@@ -142,6 +142,15 @@ def ivf_train(
     # Lloyd iteration (~0.1 s/job of pure task overhead at 32 cores on a
     # 2k-row table); a large one keeps full parallelism.
     n_train = cached.count()
+    if n_train == 0:
+        # an empty train set has no centroid to seed from at ANY
+        # fraction (it would otherwise surface as an opaque np.stack
+        # error inside the seed scan)
+        cached.unpersist()
+        raise ValueError(
+            f"IVF train set is empty (train_fraction={train_fraction}): "
+            "ivf_train needs at least one embedding row"
+        )
     if n_train < n_clusters and train_fraction < 1.0:
         # An undersized hash sample would silently break the documented
         # n_clusters x dim quantizer shape (or hit an opaque np.stack

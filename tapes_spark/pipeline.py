@@ -19,16 +19,22 @@ Stage layout (each a narrow projection until the conv_id shuffle):
   6 route      — fan-out to conversation/tool/error tapes
   7 aggregate  — per-conv rollups + windowed stats + metrics tape
 
-Scale notes: the enriched frame is persisted before fan-out so the four
-sink jobs share one scan+shuffle; all windows/aggs key on conv_id so AQE
-sees one co-partitioned lineage.  At 100 TB the input would be an Iceberg
-table bucketed by conv_id — the shuffle at stage 5 then disappears
-entirely (storage-partitioned scan).
+Scale notes: with a stage dir (the deploy path: ``submit --stage-dir``)
+the enriched frame and the tool tape are each written once as
+conv_id-bucketed, (conv_id, turn_idx)-sorted stage tables, and the nine
+sink jobs read them as bucketed scans with no further exchange; without
+one, the enriched frame is persisted in memory instead.  All windows/aggs
+key on conv_id, so the stage-5 shuffle is the pass's one wide exchange.
+At 100 TB the input would be an Iceberg table bucketed by conv_id — that
+shuffle then disappears too (storage-partitioned scan).  Counters are
+computed once: sink row counts by the sink writes themselves, the rest by
+one aggregate over the input's drop-reason ladder (:func:`run_metrics`).
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,8 +47,13 @@ from tapes_spark.functions.normalize import (
 )
 from tapes_spark.operators import aggregate as agg
 from tapes_spark.operators import route
-from tapes_spark.operators.classify import with_call_kind
-from tapes_spark.operators.dropreason import with_drop_reason
+from tapes_spark.operators.classify import call_kind_col, with_call_kind
+from tapes_spark.operators.dropreason import (
+    DROP_REASONS,
+    TRANSPORT_DROP_REASONS,
+    with_drop_reason,
+    with_full_drop_reason,
+)
 from tapes_spark.operators.enrich import (
     enrich_pricing_static,
     enrich_role_static,
@@ -65,6 +76,9 @@ class PipelineResult:
     enriched: DataFrame
     sinks: dict[str, DataFrame] = field(default_factory=dict)
     metrics: dict[str, float] = field(default_factory=dict)
+    # the pass input (after any corrections overlay): the row counters
+    # aggregate its drop-reason ladder instead of re-counting the outputs
+    transcripts: DataFrame | None = None
 
     def unpersist(self) -> None:
         """Release every frame this pass cached (enriched, tool_tape,
@@ -347,8 +361,10 @@ def run_pipeline(
     else:
         sinks["link_tape"] = in_conv
 
-    result = PipelineResult(enriched=enriched, sinks=sinks)
-    result.metrics["quarantined_rows"] = quarantined  # lazily counted by caller
+    result = PipelineResult(
+        enriched=enriched, sinks=sinks, transcripts=transcripts
+    )
+    result.metrics["quarantined_rows"] = quarantined  # derive_report samples
     result.metrics["wall_start"] = t0
     return result
 
@@ -368,6 +384,48 @@ def materialize_sinks(result: PipelineResult) -> dict[str, int]:
         return {name: f.result() for name, f in futures.items()}
 
 
+def pass_counts(
+    result: PipelineResult, raw_transcripts: DataFrame | None = None
+) -> dict:
+    """The pass's row counters from ONE grouped aggregate over the
+    drop-reason ladder of its input — never from its outputs.
+
+    Groups by ``drop_reason`` and, for derivable rows, by the C1
+    ``call_kind``: rows without a derive-tier reason are exactly the
+    enriched rows, and ``call_kind`` depends only on raw role/text/tool,
+    so the enriched frame is never re-scanned.  With *raw_transcripts*
+    (the raw stream the pass derived) the ladder is the full 8-reason one,
+    whose transport tier needs the per-conversation windows; without it,
+    the derive-tier ladder over the pass's own input.
+
+    Returns ``turns_in``, ``turns_quarantined``, ``drop_reason`` (count
+    per reason present) and ``call_kind`` (count per kind of the enriched
+    rows).
+    """
+    if raw_transcripts is not None:
+        flagged = with_full_drop_reason(raw_transcripts)
+    else:
+        flagged = with_drop_reason(result.transcripts)
+    reason = F.col("drop_reason")
+    derivable = reason.isNull() | reason.isin(*TRANSPORT_DROP_REASONS)
+    kind = F.when(
+        derivable, call_kind_col(F.col("role"), F.col("text"), F.col("tool"))
+    )
+    reasons: Counter = Counter()
+    kinds: Counter = Counter()
+    for r in flagged.groupBy(reason, kind.alias("call_kind")).count().collect():
+        if r["drop_reason"] is not None:
+            reasons[r["drop_reason"]] += r["count"]
+        if r["call_kind"] is not None:
+            kinds[r["call_kind"]] += r["count"]
+    return {
+        "turns_in": sum(kinds.values()),
+        "turns_quarantined": sum(reasons[r] for r in DROP_REASONS),
+        "drop_reason": dict(reasons),
+        "call_kind": dict(kinds),
+    }
+
+
 def run_metrics(
     spark: SparkSession,
     result: PipelineResult,
@@ -381,62 +439,42 @@ def run_metrics(
     written as a queryable tape (north_rule: "metrics emitted as an
     auditable tape").
 
-    Per-reason drop counters cover the FULL C8 ladder: the 5 derive-tier
-    reasons come from the pass's own quarantine stream (zero-filled so
-    the closed vocabulary always appears); the 3 transport-tier reasons
-    need the per-conversation windows over the RAW capture stream — pass
-    *raw_transcripts* to audit them (dropreason.go's per-reason counter
-    contract).  Without raw input the transport counters are OMITTED,
-    never fabricated as zero.
-    """
-    from tapes_spark.operators.dropreason import (
-        DROP_REASONS,
-        TRANSPORT_DROP_REASONS,
-        with_full_drop_reason,
-    )
+    Counters are computed once: ``turns_in``, ``turns_quarantined``, the
+    per-reason drop counters and the ``call_kind_*`` histogram all come
+    from the single aggregate of :func:`pass_counts`.  No sink is
+    re-run or re-counted here — ``sink_*_rows`` is written only by
+    ``SinkWriter.write_all``, from each commit's manifest row count.
 
-    counters: list[tuple[str, str, float]] = []
-    enriched = result.enriched
-    counters.append((run_id, "turns_in", float(enriched.count())))
-    quarantined = result.metrics.get("quarantined_rows")
-    if quarantined is not None and not isinstance(quarantined, (int, float)):
-        counters.append((run_id, "turns_quarantined", float(quarantined.count())))
-        derive_hist = {
-            r["drop_reason"]: r["count"]
-            for r in quarantined.groupBy("drop_reason").count().collect()
-        }
-        for reason in DROP_REASONS:
-            counters.append(
-                (run_id, f"drop_reason_{reason}",
-                 float(derive_hist.get(reason, 0)))
-            )
+    Per-reason drop counters cover the FULL C8 ladder: the 5 derive-tier
+    reasons are always present (zero-filled so the closed vocabulary
+    always appears); the 3 transport-tier reasons need the
+    per-conversation windows over the RAW capture stream — pass
+    *raw_transcripts* (the raw stream the pass derived) to audit them
+    (dropreason.go's per-reason counter contract).  Without raw input the
+    transport counters are OMITTED, never fabricated as zero.
+    """
+    counts = pass_counts(result, raw_transcripts)
+    reasons = DROP_REASONS
     if raw_transcripts is not None:
-        transport_hist = {
-            r["drop_reason"]: r["count"]
-            for r in with_full_drop_reason(raw_transcripts)
-            .filter(F.col("drop_reason").isin(*TRANSPORT_DROP_REASONS))
-            .groupBy("drop_reason")
-            .count()
-            .collect()
-        }
-        for reason in TRANSPORT_DROP_REASONS:
-            counters.append(
-                (run_id, f"drop_reason_{reason}",
-                 float(transport_hist.get(reason, 0)))
-            )
-    kind_hist = {
-        r["call_kind"]: r["count"]
-        for r in enriched.groupBy("call_kind").count().collect()
-    }
-    for k, v in sorted(kind_hist.items()):
-        counters.append((run_id, f"call_kind_{k}", float(v)))
-    for name, df in result.sinks.items():
-        counters.append((run_id, f"sink_{name}_rows", float(df.count())))
-    counters.append(
-        (run_id, "wall_seconds",
-         float(time.time() - result.metrics.get("wall_start", time.time())))
+        reasons += TRANSPORT_DROP_REASONS
+    values = [
+        ("turns_in", counts["turns_in"]),
+        ("turns_quarantined", counts["turns_quarantined"]),
+    ]
+    values += [
+        (f"drop_reason_{r}", counts["drop_reason"].get(r, 0)) for r in reasons
+    ]
+    values += [
+        (f"call_kind_{k}", v) for k, v in sorted(counts["call_kind"].items())
+    ]
+    values.append(
+        ("wall_seconds",
+         time.time() - result.metrics.get("wall_start", time.time()))
     )
-    return spark.createDataFrame(counters, ["run_id", "metric", "value"])
+    return spark.createDataFrame(
+        [(run_id, name, float(v)) for name, v in values],
+        ["run_id", "metric", "value"],
+    )
 
 
 REPORT_SAMPLE_CAP = 20  # "a wholly broken pass doesn't produce a megabyte
@@ -450,25 +488,21 @@ def derive_report(result: PipelineResult) -> dict:
     turn samples and unattached check turns are capped at 20; histograms
     are full.  Caps are explicit in the output, never silent.
     """
-    enriched = result.enriched
-    report: dict = {"sample_cap": REPORT_SAMPLE_CAP}
-    report["call_kind_histogram"] = {
-        r["call_kind"]: r["count"]
-        for r in enriched.groupBy("call_kind").count().collect()
-    }
-    quarantined = result.metrics.get("quarantined_rows")
-    if quarantined is not None and not isinstance(quarantined, (int, float)):
-        report["quarantined_count"] = quarantined.count()
+    counts = pass_counts(result)
+    report: dict = {
+        "sample_cap": REPORT_SAMPLE_CAP,
+        "call_kind_histogram": counts["call_kind"],
+        "quarantined_count": counts["turns_quarantined"],
         # C8: per-reason histogram over the closed vocabulary
-        report["drop_reason_histogram"] = {
-            r["drop_reason"]: r["count"]
-            for r in quarantined.groupBy("drop_reason").count().collect()
-        }
-        report["quarantined_samples"] = [
-            {"conv_id": r["conv_id"], "turn_idx": r["turn_idx"],
-             "role": r["role"]}
-            for r in quarantined.limit(REPORT_SAMPLE_CAP).collect()
-        ]
+        "drop_reason_histogram": counts["drop_reason"],
+    }
+    report["quarantined_samples"] = [
+        {"conv_id": r["conv_id"], "turn_idx": r["turn_idx"],
+         "role": r["role"]}
+        for r in result.metrics["quarantined_rows"]
+        .limit(REPORT_SAMPLE_CAP)
+        .collect()
+    ]
     if "verdict_attachments" in result.sinks:
         va = result.sinks["verdict_attachments"]
         unattached = va.filter(F.col("tool_turn_idx").isNull())

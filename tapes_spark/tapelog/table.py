@@ -24,8 +24,12 @@ Semantics:
   * read(snapshot_id=None)    — current or time-travel read
   * snapshots()               — the change feed (D4): consumers record the
         last snapshot id they processed and read only newer ones
-  * lineage in every manifest — run_id, input fingerprint, operation,
-        per-write row counts (the auditable tape the north_rule asks for)
+  * lineage in every manifest — run_id, input fingerprint, operation
+        (the auditable tape the north_rule asks for)
+  * row counts in every manifest — each data group's row count is
+        observed on the write that creates it (Iceberg's per-file
+        ``record_count``), so :meth:`row_count` never re-scans a table
+        written by this version
 
 Writer concurrency: single-writer per table (the per-session advisory
 lock analog ST3 — in Spark one driver owns a sink).  Readers are safe at
@@ -41,7 +45,7 @@ import time
 import uuid
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Partition-pruning stats are hash-bucket sets, NOT value lists: a group's
@@ -69,6 +73,14 @@ def _entry_buckets(entry, partition_col: str) -> set[int] | None:
     if isinstance(entry, dict) and entry.get("col") == partition_col:
         return set(entry.get("buckets", ()))
     return None
+
+
+def _group_files(files: list[str]) -> dict[str, list[str]]:
+    """Manifest files by data group dir, in manifest order."""
+    groups: dict[str, list[str]] = {}
+    for f in files:
+        groups.setdefault(os.path.dirname(f), []).append(f)
+    return groups
 
 try:  # pragma: no cover - exercised only on clusters with Iceberg jars
     import importlib.util
@@ -117,22 +129,29 @@ class TapeTable:
 
     # ------------------------------------------------------------ write
 
-    def _write_data_group(self, df: DataFrame) -> tuple[str, list[str]]:
+    def _write_data_group(self, df: DataFrame) -> tuple[str, list[str], int]:
+        """Write *df* as one new immutable data group.  Returns the group
+        dir (relative to the root), its files, and its row count — counted
+        by an Observation on the write job itself, not by a second scan."""
         group = uuid.uuid4().hex
         path = os.path.join(self.root, "data", group)
-        df.write.mode("overwrite").parquet(path)
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(path)
         files = sorted(
             os.path.join("data", group, f)
             for f in os.listdir(path)
             if f.endswith(".parquet")
         )
-        return group, files
+        return os.path.join("data", group), files, int(rows.get["n"])
 
     def _commit(
         self,
         files: list[str],
         operation: str,
         lineage: dict | None,
+        group_rows: dict[str, int],
         partition_buckets: dict[str, dict] | None = None,
     ) -> int:
         parent = self.current_snapshot_id()
@@ -145,6 +164,7 @@ class TapeTable:
             "committed_at_unix": time.time(),
             "lineage": lineage or {},
             "partition_buckets": partition_buckets or {},
+            "group_rows": group_rows,
         }
         tmp = self._manifest_path(snapshot_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -181,25 +201,26 @@ class TapeTable:
         a key subset (:meth:`read_pruned`) skip non-intersecting groups —
         the file-skipping a conv_id-bucketed Iceberg layout gives a
         storage-partitioned scan."""
-        group, new_files = self._write_data_group(df)
+        group_dir, new_files, n = self._write_data_group(df)
         parent = self.current_snapshot_id()
-        prev_files = self.manifest(parent)["files"] if parent else []
-        prev_pb = self.manifest(parent).get("partition_buckets", {}) if parent else {}
+        m = self.manifest(parent) if parent else {}
+        prev_files = m.get("files", [])
+        prev_pb = dict(m.get("partition_buckets", {}))
+        group_rows = {**m.get("group_rows", {}), group_dir: n}
         if partition_col is not None and new_files:
             # stats record WHICH column they were computed on — bucket
             # sets for one column must never prune scans keyed on another
-            prev_pb = dict(prev_pb)
-            prev_pb[os.path.join("data", group)] = {
+            prev_pb[group_dir] = {
                 "col": partition_col,
-                "buckets": self._group_buckets(
-                    os.path.join("data", group), partition_col
-                ),
+                "buckets": self._group_buckets(group_dir, partition_col),
             }
-        return self._commit(prev_files + new_files, "append", lineage, prev_pb)
+        return self._commit(
+            prev_files + new_files, "append", lineage, group_rows, prev_pb
+        )
 
     def overwrite(self, df: DataFrame, lineage: dict | None = None) -> int:
-        _, new_files = self._write_data_group(df)
-        return self._commit(new_files, "overwrite", lineage)
+        group_dir, new_files, n = self._write_data_group(df)
+        return self._commit(new_files, "overwrite", lineage, {group_dir: n})
 
     def overwrite_partitions(
         self,
@@ -223,9 +244,11 @@ class TapeTable:
         kept_files: list[str] = []
         rewritten: list[DataFrame] = []
         prev_pb: dict[str, list[int]] = {}
+        prev_rows: dict[str, int] = {}
         if parent:
             m = self.manifest(parent)
             prev_pb = m.get("partition_buckets", {})
+            prev_rows = m.get("group_rows", {})
             # legacy manifests (pre-bucket) stored stringified value lists;
             # fold into bucket space AND record the column so the stats
             # stay applicable (legacy partition_values were always written
@@ -236,10 +259,7 @@ class TapeTable:
                     {"col": partition_col,
                      "buckets": sorted({_key_bucket(v) for v in vals})},
                 )
-            groups: dict[str, list[str]] = {}
-            for f in m["files"]:
-                groups.setdefault(os.path.dirname(f), []).append(f)
-            for group_dir, files in groups.items():
+            for group_dir, files in _group_files(m["files"]).items():
                 buckets = _entry_buckets(prev_pb.get(group_dir), partition_col)
                 if buckets is not None and not (buckets & key_buckets):
                     kept_files.extend(files)
@@ -253,27 +273,19 @@ class TapeTable:
         to_write = df
         for r in rewritten:
             to_write = to_write.unionByName(r)
-        group, new_files = self._write_data_group(to_write)
-        group_dir = os.path.join("data", group)
-        # record the new group's bucket set for future pruning — bounded at
-        # _N_BUCKETS rows on the driver regardless of key cardinality
-        bucket_rows = (
-            self.spark.read.parquet(os.path.join(self.root, group_dir))
-            .select(
-                (F.crc32(F.col(partition_col).cast("string")) % _N_BUCKETS)
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        new_pb = {d: b for d, b in prev_pb.items()
-                  if any(f.startswith(d) for f in kept_files)}
+        group_dir, new_files, n = self._write_data_group(to_write)
+        kept_groups = {os.path.dirname(f) for f in kept_files}
+        new_pb = {d: b for d, b in prev_pb.items() if d in kept_groups}
+        # record the new group's bucket set for future pruning
         new_pb[group_dir] = {
             "col": partition_col,
-            "buckets": sorted(int(r[0]) for r in bucket_rows),
+            "buckets": self._group_buckets(group_dir, partition_col),
         }
+        group_rows = {d: r for d, r in prev_rows.items() if d in kept_groups}
+        group_rows[group_dir] = n
         return self._commit(
-            kept_files + new_files, "overwrite_partitions", lineage, new_pb
+            kept_files + new_files, "overwrite_partitions", lineage,
+            group_rows, new_pb,
         )
 
     # ------------------------------------------------------------- read
@@ -287,6 +299,26 @@ class TapeTable:
             raise ValueError(f"snapshot {sid} has no data files")
         paths = [os.path.join(self.root, f) for f in files]
         return self.spark.read.parquet(*paths)
+
+    def row_count(self, snapshot_id: int | None = None) -> int:
+        """Rows in a snapshot: the sum of its groups' recorded counts,
+        with no scan.  Only groups committed before counts were recorded
+        (legacy manifests) are counted with a read of their files."""
+        sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
+        if sid is None:
+            raise ValueError(f"tape table {self.root} has no snapshots")
+        m = self.manifest(sid)
+        recorded = m.get("group_rows", {})
+        total = 0
+        legacy: list[str] = []
+        for group_dir, files in _group_files(m["files"]).items():
+            if group_dir in recorded:
+                total += recorded[group_dir]
+            else:
+                legacy.extend(os.path.join(self.root, f) for f in files)
+        if legacy:
+            total += self.spark.read.parquet(*legacy).count()
+        return total
 
     def pruned_files(self, partition_col: str, keys: list) -> list[str]:
         """The subset of current data files whose group bucket stats can
@@ -422,9 +454,7 @@ class TapeTable:
         if sid is None:
             return None
         m = self.manifest(sid)
-        groups: dict[str, list[str]] = {}
-        for f in m["files"]:
-            groups.setdefault(os.path.dirname(f), []).append(f)
+        groups = _group_files(m["files"])
         added_at = self._group_added_at()
         cand: list[str] = []
         cand_bytes = 0
@@ -444,7 +474,7 @@ class TapeTable:
         merged = self.spark.read.parquet(
             *[os.path.join(self.root, f) for f in src_files]
         ).repartition(max(1, -(-cand_bytes // target_bytes)))
-        group, new_files = self._write_data_group(merged)
+        group_dir, new_files, n = self._write_data_group(merged)
         kept_files = [
             f for f in m["files"] if os.path.dirname(f) not in cand_set
         ]
@@ -455,17 +485,24 @@ class TapeTable:
         entries = [pb.pop(d, None) for d in cand]
         cols = {e["col"] for e in entries if isinstance(e, dict) and "col" in e}
         if len(cols) == 1 and all(isinstance(e, dict) for e in entries):
-            pb[os.path.join("data", group)] = {
+            pb[group_dir] = {
                 "col": cols.pop(),
                 "buckets": sorted(
                     {b for e in entries for b in e.get("buckets", ())}
                 ),
             }
+        group_rows = {
+            d: r for d, r in m.get("group_rows", {}).items()
+            if d not in cand_set
+        }
+        group_rows[group_dir] = n
         info = dict(lineage or {})
         info.setdefault("compacted_groups", len(cand))
         info.setdefault("compacted_files", len(src_files))
         info.setdefault("compacted_bytes", cand_bytes)
-        return self._commit(kept_files + new_files, "compact", info, pb)
+        return self._commit(
+            kept_files + new_files, "compact", info, group_rows, pb
+        )
 
     def expire_snapshots(self, keep_last: int = 5) -> dict:
         """Drop all but the newest *keep_last* snapshot manifests and

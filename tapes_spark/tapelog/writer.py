@@ -9,10 +9,12 @@ byte-identical to a single clean run (the reference's at-least-once +
 idempotent contract, deriveworker.go:71-73; pytest gate in
 tests/test_tapelog.py::test_resume_after_partial_failure).
 
-Every commit records lineage (run_id, fingerprint, sink row count) in the
-manifest, and a row is appended to the `metrics` tape — the auditable
-per-run metrics stream (S10/A8, north_rule "metrics emitted as an
-auditable tape").
+Every commit records lineage (run_id, fingerprint) and the row count of
+each data group it wrote in the manifest, and the run's rows are appended
+to the `metrics` tape — the auditable per-run metrics stream (S10/A8,
+north_rule "metrics emitted as an auditable tape").  `sink_*_rows` is the
+committed snapshot's manifest row count: counted once, by the write job
+itself, never by reading the sink back.
 """
 
 from __future__ import annotations
@@ -64,7 +66,10 @@ class SinkWriter:
     ) -> dict[str, int | None]:
         """Write every sink (full overwrite, or partition-scoped when
         conv_ids given).  Returns snapshot id per sink; None = skipped
-        because the fingerprint already committed (resume path)."""
+        because the fingerprint already committed (resume path).  Appends
+        each written sink's `sink_*_rows` (from its commit's manifest)
+        and write time to the metrics tape — the only writer of those
+        counters."""
         out: dict[str, int | None] = {}
         metrics_rows: list[tuple] = []
         t_run = time.time()
@@ -87,9 +92,9 @@ class SinkWriter:
             else:
                 sid = self.tables[name].overwrite(df, lineage)
             out[name] = sid
-            n = self.tables[name].read(sid).count()
             metrics_rows.append(
-                (run_id, f"sink_{name}_rows", float(n))
+                (run_id, f"sink_{name}_rows",
+                 float(self.tables[name].row_count(sid)))
             )
             metrics_rows.append(
                 (run_id, f"sink_{name}_write_sec", round(time.time() - t0, 3))

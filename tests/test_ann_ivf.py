@@ -311,3 +311,9 @@ class TestSampledTrainGuard:
         cents = ann_ivf.ivf_train(tiny, n_clusters=N_CLUSTERS, n_iters=2)
         dim = len(corpus.select("embedding").first()[0])
         assert cents.shape == (N_CLUSTERS, dim)
+
+    def test_empty_train_set_raises_clearly(self, corpus):
+        """An empty embeddings frame fails with a clear error at the
+        default fraction too, not an opaque error inside the seed scan."""
+        with pytest.raises(ValueError, match="train set is empty"):
+            ann_ivf.ivf_train(corpus.limit(0), n_clusters=N_CLUSTERS)

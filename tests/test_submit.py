@@ -42,6 +42,93 @@ class TestFullMode:
         for reason in ("missing_ts", "duplicate_capture", "ts_regression"):
             assert f"drop_reason_{reason}" in metrics
 
+    def test_staged_submit_matches_unstaged_pipeline(
+        self, spark, tx_path, tmp_path
+    ):
+        """The deploy path (``--stage-dir``: bucketed stage tables) writes
+        the same sinks as the unstaged in-memory pass, and its metrics
+        tape holds each counter once, equal to a direct count.  The input
+        is the fixture plus one row of each transport-tier damage, so the
+        transport counters are exercised (those rows stay derivable)."""
+        from pyspark.sql import functions as F
+
+        from tapes_spark.operators.dropreason import (
+            DROP_REASONS,
+            TRANSPORT_DROP_REASONS,
+            with_full_drop_reason,
+        )
+        from tapes_spark.pipeline import run_pipeline
+        from tapes_spark.streaming.stream import batch_fingerprint
+
+        clean = spark.read.parquet(tx_path)
+        c0 = clean.agg(F.min("conv_id")).first()[0]
+        conv = clean.filter(F.col("conv_id") == c0)
+        last_idx, first_ts = conv.agg(F.max("turn_idx"), F.min("ts")).first()
+        first = conv.filter(F.col("turn_idx") == 0)
+        damage = (
+            # a retransmit of turn 0, captured 5 s later
+            first.withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 SECONDS"))
+            # a capture with no capture time
+            .unionByName(
+                conv.filter(F.col("turn_idx") == 1)
+                .withColumn("ts", F.lit(None).cast("timestamp"))
+            )
+            # a later turn captured before the conversation started
+            .unionByName(
+                first.withColumn("turn_idx", F.lit(last_idx + 1).cast("int"))
+                .withColumn(
+                    "ts", F.lit(first_ts) - F.expr("INTERVAL 1 HOUR")
+                )
+            )
+        )
+        in_path = str(tmp_path / "tx.parquet")
+        clean.unionByName(damage).write.parquet(in_path)
+        tx = spark.read.parquet(in_path)
+
+        sinks = str(tmp_path / "sinks")
+        out = submit.main(
+            ["--input", in_path, "--sinks", sinks, "--run-id", "s1",
+             "--stage-dir", str(tmp_path / "stage")]
+        )
+        assert not out["resumed_noop"]
+        ref = run_pipeline(spark, tx, persist=True)
+        w = SinkWriter(spark, sinks)
+        for name in SINK_NAMES:
+            assert batch_fingerprint(w.read(name)) == batch_fingerprint(
+                ref.sinks[name]
+            ), name
+
+        rows = w.metrics.read().filter(F.col("run_id") == "s1").collect()
+        names = [r["metric"] for r in rows]
+        assert len(names) == len(set(names)), sorted(names)
+        got = {r["metric"]: r["value"] for r in rows}
+
+        def hist(df, col):
+            return {
+                r[col]: r["count"] for r in df.groupBy(col).count().collect()
+            }
+
+        quarantined = ref.metrics["quarantined_rows"]
+        want = {f"sink_{n}_rows": w.read(n).count() for n in SINK_NAMES}
+        want["turns_in"] = ref.enriched.count()
+        want["turns_quarantined"] = quarantined.count()
+        derive = hist(quarantined, "drop_reason")
+        transport = hist(with_full_drop_reason(tx), "drop_reason")
+        for reason in DROP_REASONS:
+            want[f"drop_reason_{reason}"] = derive.get(reason, 0)
+        for reason in TRANSPORT_DROP_REASONS:
+            want[f"drop_reason_{reason}"] = transport.get(reason, 0)
+        assert all(transport.get(r) == 1 for r in TRANSPORT_DROP_REASONS)
+        for kind, n in hist(ref.enriched, "call_kind").items():
+            want[f"call_kind_{kind}"] = n
+        ref.unpersist()
+        counted = {
+            k: v for k, v in got.items()
+            if k.startswith(("sink_", "turns_", "drop_reason_", "call_kind_"))
+            and not k.endswith("_write_sec")
+        }
+        assert counted == {k: float(v) for k, v in want.items()}
+
     def test_resubmit_same_input_is_noop(self, spark, tx_path, tmp_path):
         sinks = str(tmp_path / "sinks")
         submit.main(

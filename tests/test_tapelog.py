@@ -423,3 +423,82 @@ class TestMaintenance:
         # pruned read still sees every row
         assert m["partition_buckets"] == {}
         assert t.read_pruned("conv_id", ["b"]).count() == 2
+
+
+class TestManifestRowCounts:
+    """Every write records its group's row count in the manifest, so a
+    snapshot's row count needs no scan (Iceberg's per-file record_count)."""
+
+    SCHEMA = "conv_id string, v int"
+
+    def _rows(self, spark, *rows):
+        return spark.createDataFrame(list(rows), self.SCHEMA)
+
+    def _assert_counted(self, t, sid=None):
+        import os
+
+        m = t.manifest(sid if sid is not None else t.current_snapshot_id())
+        groups = {os.path.dirname(f) for f in m["files"]}
+        assert groups <= set(m["group_rows"])  # no read needed
+        assert t.row_count(sid) == t.read(sid).count()
+
+    def test_counts_follow_every_operation(self, spark, tmp_path):
+        import os
+
+        from tapes_spark.tapelog.table import _key_bucket
+
+        t = TapeTable(spark, str(tmp_path / "rc1"))
+        s1 = t.append(
+            self._rows(spark, ("a", 1), ("a", 2), ("b", 3)),
+            partition_col="conv_id",
+        )
+        self._assert_counted(t)
+        t.append(self._rows(spark, ("c", 4)), partition_col="conv_id")
+        self._assert_counted(t)
+        assert t.row_count() == 4
+        assert t.row_count(s1) == 3  # time travel reads its own manifest
+        # re-derive conv a: its group is rewritten, c's group is kept
+        assert _key_bucket("a") != _key_bucket("c")
+        before = t.manifest(t.current_snapshot_id())
+        sid = t.overwrite_partitions(
+            self._rows(spark, ("a", 9)), "conv_id", ["a"]
+        )
+        after = t.manifest(sid)
+        kept = {os.path.dirname(f) for f in after["files"]} & {
+            os.path.dirname(f) for f in before["files"]
+        }
+        assert len(kept) == 1 and len(after["group_rows"]) == 2
+        self._assert_counted(t)
+        assert t.row_count() == 3  # a:9, b:3, c:4
+        t.append(self._rows(spark, ("d", 5)), partition_col="conv_id")
+        sid = t.compact(upto_snapshot_id=t.current_snapshot_id())
+        assert t.manifest(sid)["operation"] == "compact"
+        self._assert_counted(t)
+        assert t.row_count() == 4
+        t.overwrite(self._rows(spark, ("e", 6), ("f", 7)))
+        self._assert_counted(t)
+        assert t.row_count() == 2
+
+    def test_legacy_manifest_without_counts(self, spark, tmp_path):
+        """Groups committed before counts were recorded are counted with a
+        read; groups written since still use their recorded count."""
+        import json
+
+        t = TapeTable(spark, str(tmp_path / "rc2"))
+        s1 = t.append(self._rows(spark, ("a", 1), ("b", 2)))
+        path = t._manifest_path(s1)
+        with open(path) as f:
+            m = json.load(f)
+        del m["group_rows"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+        assert t.row_count() == 2
+        s2 = t.append(self._rows(spark, ("c", 3)))
+        assert len(t.manifest(s2)["group_rows"]) == 1  # only the new group
+        assert t.row_count() == 3 == t.read().count()
+
+    def test_zero_row_write_records_zero(self, spark, tmp_path):
+        t = TapeTable(spark, str(tmp_path / "rc3"))
+        sid = t.overwrite(self._rows(spark, ("a", 1)).limit(0))
+        assert list(t.manifest(sid)["group_rows"].values()) == [0]
+        assert t.row_count() == 0
